@@ -558,20 +558,21 @@ def ngram_jaccard_pairs(
     """
     from crypto_data_pipeline_spark.sources.tables import fan_out
 
-    raw_sets = (
+    exploded = (
         fan_out(df)
         .select(F.col(id_col).alias("id"), tokens(text).alias("_tk"))
-        .select("id", word_shingles(k=k, toks=F.col("_tk")).alias("sh0"))
+        .select("id", F.explode(word_shingles(k=k, toks=F.col("_tk"))).alias("s"))
     )
-    # shingle sets feed the frequency pass AND the rank join — persist
-    # so the (string-heavy) shingling expression evaluates once
-    raw_sets = raw_sets.persist()
-    exploded = raw_sets.select("id", F.explode("sh0").alias("s"))
-    freq = exploded.groupBy("s").agg(F.count(F.lit(1)).alias("f"))
+    # global shingle frequency as a window over the shingle, not a
+    # groupBy joined back: the (string-heavy) shingling expression then
+    # has ONE consumer and evaluates once per action with nothing
+    # persisted (a join-back reads the shingle sets twice, or needs a
+    # persist that no caller of this lazy frame can release)
+    freq = F.count(F.lit(1)).over(Window.partitionBy("s"))
     # per doc: shingles sorted by (global freq asc, shingle) — structs
     # compare field-wise identically in Spark and DuckDB
     sets = (
-        exploded.join(freq, "s")
+        exploded.withColumn("f", freq)
         .groupBy("id")
         .agg(F.array_sort(F.collect_list(F.struct("f", "s"))).alias("fs"))
         .select("id", F.transform("fs", lambda x: x["s"]).alias("sh"))

@@ -19,6 +19,14 @@ data, becomes the bottleneck. For adversarial long-chain graphs at
 scale, the alternating small-star/large-star formulation (Kiveris et
 al., "Connected Components in MapReduce") converges in O(log d)
 rounds; min-label is the right default for dedup-shaped graphs.
+
+Every iterative operator here (both CC loops and pagerank) shares one
+loop shape: the caller's edge list is localCheckpoint'd once, so its
+upstream pair pipeline runs once per call and the loop plans against
+a leaf scan; the checkpoint's row count sizes `_iterative_loop_conf`,
+under which the rounds are planned statically (AQE off, size-derived
+shuffle partitions). Nothing in the loops is persisted, so nothing is
+left in the session's cache when they return or raise.
 """
 
 from __future__ import annotations
@@ -27,7 +35,7 @@ import contextlib
 
 from pyspark.sql import DataFrame, functions as F
 
-# target rows per shuffle partition inside the iterative CC loops
+# target rows per shuffle partition inside the iterative loops
 # (round 14, VERDICT r13 next #6): the loop's shuffle sizing derives
 # from the MATERIALIZED edge count, not from a constant tuned for any
 # one box — a 2k-edge near-dup graph runs single-task rounds, a
@@ -41,36 +49,50 @@ _CC_ROWS_PER_PARTITION_DEFAULT = 65536
 def _iterative_loop_conf(spark, n_rows: int):
     """Plan the body's queries with AQE OFF and shuffle partitions
     derived from the loop frame's materialized row count (guide §1.2
-    step 1 + §2.2). The convergence-checked loops run one ACTION per
-    round over label/edge-sized frames; with AQE on, every round
-    re-plans adaptively and materializes each Exchange as its own job
-    — pure scheduling overhead on frames whose size the loop already
-    KNOWS (the edge list is localCheckpoint'd and counted). Static
-    plans with size-derived partitioning cut the isolated min-label
-    loop's scheduled jobs 15 → 9 per call on the sf0.1 near-dup graph
-    (measured; wall/CPU neutral locally — the win is scheduling
-    volume, which grows with rounds × exchanges at scale). Skew note:
-    the loop's aggregations partial-combine map-side and the
-    sym⋈labels join is 1:1 per edge, so AQE's skew-join splitting has
-    nothing to do here. Both conf keys are restored on exit; the
+    step 1 + §2.2). The iterative loops (the two CC loops, pagerank)
+    plan label/edge-sized frames whose size the loop already KNOWS
+    (the edge list is localCheckpoint'd and counted); with AQE on,
+    every round re-plans adaptively and materializes each Exchange as
+    its own job — pure scheduling overhead. Static plans with
+    size-derived partitioning cut the isolated min-label loop's
+    scheduled jobs 15 → 9 per call on the sf0.1 near-dup graph
+    (measured; the win is scheduling volume, which grows with rounds ×
+    exchanges at scale). Skew note: the loops' aggregations
+    partial-combine map-side and their joins are 1:1 per edge, so
+    AQE's skew-join splitting has nothing to do here.
+
+    Both keys are read with defaults and put back exactly as found: a
+    key that was set keeps its value, a key that was unset is unset
+    again (not pinned to its default), on return and on raise. The
     frames the loop RETURNS are checkpointed RDDs, so downstream
-    consumers replan under the session's normal adaptive config."""
+    consumers replan under the session's normal adaptive config.
+
+    Single-driver-thread assumption: the two keys are SESSION-global
+    conf, so a query planned on the same SparkSession from another
+    thread while the body runs is planned with AQE off and the loop's
+    partition count. The engine's callers drive a session from one
+    thread; concurrent callers need one session per thread
+    (``spark.newSession()`` has its own conf)."""
     import os
 
     rows_per_part = int(
         os.environ.get(_CC_ROWS_PER_PARTITION_ENV, _CC_ROWS_PER_PARTITION_DEFAULT)
     )
     conf = spark.conf
-    old_aqe = conf.get("spark.sql.adaptive.enabled")
-    old_parts = conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(old_parts), -(-n_rows // rows_per_part)))
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    old = {k: conf.get(k, None) for k in keys}  # None = unset
+    session_parts = int(old["spark.sql.shuffle.partitions"] or 200)  # Spark's default
+    loop_parts = max(1, min(session_parts, -(-n_rows // rows_per_part)))
     try:
         conf.set("spark.sql.adaptive.enabled", "false")
         conf.set("spark.sql.shuffle.partitions", str(loop_parts))
         yield
     finally:
-        conf.set("spark.sql.adaptive.enabled", old_aqe)
-        conf.set("spark.sql.shuffle.partitions", old_parts)
+        for k, v in old.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
 
 
 def connected_components(
@@ -245,53 +267,59 @@ def pagerank(
     single action at the end; no per-iteration driver round-trips,
     unlike the convergence-checked CC above).
 
+    Same loop shape as connected_components: the edge list is an
+    eager ``localCheckpoint`` (its upstream lineage — often an
+    expensive candidate-generation pipeline — runs once, and every
+    iteration plans against a leaf scan instead of re-walking it), its
+    count sizes `_iterative_loop_conf`, and the unrolled iterations
+    plus the final checkpoint are planned inside it: static plans,
+    size-derived partitions, no per-Exchange adaptive jobs. Over a
+    PERSISTED edge list the same DAG spent most of its wall in driver
+    planning (68 jobs for 5 iterations on the curation benchmark's
+    500-document near-dup graph, 4 local cores).
+
     Per iteration: one join edges->ranks on src (co-partitioned with
     the degree join) and one groupBy on dst — two key Exchanges per
     iteration, rank/degree frames are node-sized (<< edges). At real
     scale pass ``checkpoint_every`` to cut the growing lineage with a
-    localCheckpoint every k iterations; the node count is the one
-    driver scalar (documented, like the CC convergence scalar).
+    localCheckpoint every k iterations. The edge and node counts are
+    the only driver scalars, both taken before the loop.
+
+    Nothing is persisted: the checkpointed frames are released by the
+    context cleaner once unreachable (the returned ranks are their own
+    checkpoint), and an empty edge list returns an empty frame.
 
     Differentially testable: with portable edges, fixed iterations and
     double arithmetic, DuckDB reproduces ranks to well inside 6 dp
     (PageRank is a contraction — per-iteration last-ulp sum-order
     noise decays rather than compounds)."""
-    # edges (and its whole upstream lineage — often an expensive
-    # candidate-generation pipeline) is consumed 2x per iteration;
-    # without a persist every iteration of the unrolled DAG re-runs
-    # it from the scan. nodes/deg likewise are loop-invariant.
-    edges = edges.persist()
-    nodes = edges.select(F.col(src).alias("id")).distinct().persist()
-    n = nodes.count()
-    if n == 0:
-        # the empty path must release the two persists already taken
-        # (deg doesn't exist yet) or every empty-graph call leaks them
-        nodes.unpersist()
-        edges.unpersist()
-        return edges.sparkSession.createDataFrame([], "id long, rank double")
-    deg = edges.groupBy(src).agg(F.count(F.lit(1)).cast("double").alias("deg")).persist()
-    ranks = nodes.select("id", F.lit(1.0 / n).alias("rank"))
-    base = F.lit((1.0 - damping) / n)
-    for i in range(iters):
-        j = edges.join(ranks.withColumnRenamed("id", src), src).join(deg, src)
-        contribs = j.groupBy(F.col(dst).alias("id")).agg(
-            F.sum(F.col("rank") / F.col("deg")).alias("s")
+    spark = edges.sparkSession
+    edges = edges.localCheckpoint()
+    n_edges = edges.count()  # cheap: counts the materialized checkpoint
+    if n_edges == 0:
+        return spark.createDataFrame([], "id long, rank double")
+    with _iterative_loop_conf(spark, n_edges):
+        nodes = edges.select(F.col(src).alias("id")).distinct().localCheckpoint()
+        n = nodes.count()
+        deg = (
+            edges.groupBy(src)
+            .agg(F.count(F.lit(1)).cast("double").alias("deg"))
+            .localCheckpoint()
         )
-        ranks = nodes.join(contribs, "id", "left").select(
-            "id",
-            (base + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))).alias("rank"),
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=False)
-    # materialize the final ranks, then RELEASE the loop-invariant
-    # caches — without this every pagerank call leaks three persisted
-    # frames (including the whole upstream edge pipeline) into executor
-    # storage for the session's lifetime
-    ranks = ranks.localCheckpoint(eager=True)
-    deg.unpersist()
-    nodes.unpersist()
-    edges.unpersist()
-    return ranks
+        ranks = nodes.select("id", F.lit(1.0 / n).alias("rank"))
+        base = F.lit((1.0 - damping) / n)
+        for i in range(iters):
+            j = edges.join(ranks.withColumnRenamed("id", src), src).join(deg, src)
+            contribs = j.groupBy(F.col(dst).alias("id")).agg(
+                F.sum(F.col("rank") / F.col("deg")).alias("s")
+            )
+            ranks = nodes.join(contribs, "id", "left").select(
+                "id",
+                (base + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))).alias("rank"),
+            )
+            if checkpoint_every and (i + 1) % checkpoint_every == 0:
+                ranks = ranks.localCheckpoint(eager=False)
+        return ranks.localCheckpoint(eager=True)
 
 
 def triangle_count(edges: DataFrame, src: str, dst: str) -> DataFrame:

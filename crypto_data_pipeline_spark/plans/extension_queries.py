@@ -26,6 +26,7 @@ from crypto_data_pipeline_spark.operators import (
     similarity,
     text,
 )
+from crypto_data_pipeline_spark.observability import source_fingerprint
 from crypto_data_pipeline_spark.operators.text import LANG_PRIORITY, STOPWORDS
 from crypto_data_pipeline_spark.plans.registry import register
 from crypto_data_pipeline_spark.sources.tables import load_table
@@ -402,7 +403,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = docs.where(F.col("doc_id") % 10 != 0)
     delivery = docs.where(F.col("doc_id") % 10 == 0)
     key = (spark.sparkContext.applicationId, sf_dir)
-    sigs_store = _cache_get_fresh(_SIG_STORE_CACHE, key, docs)
+    sigs_store = _cache_get_fresh(_SIG_STORE_CACHE, key, docs, lambda df: df)
     if sigs_store is None:
         import json
         import tempfile
@@ -411,18 +412,19 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         # registered before writing — same leak guard as the indexes
         _SIG_STORE_DIRS[key] = store_dir
         path = os.path.join(store_dir, "sigs")
+        # corpus identity in the store's own sidecar + the serve-time
+        # freshness recheck (round 14, VERDICT r12 next #6 carry-over),
+        # taken before the build reads the corpus
+        fp = source_fingerprint(docs)
         dedup.portable_minhash_signatures(store).write.mode(
             "overwrite"
         ).parquet(path)
-        # corpus identity in the store's own sidecar + the serve-time
-        # freshness recheck (round 14, VERDICT r12 next #6 carry-over)
-        fp = _record_cache_source(_SIG_STORE_CACHE, key, docs)
         with open(os.path.join(store_dir, "meta.json"), "w") as f:
             json.dump({"source_fingerprint": fp}, f)
         sigs_store = spark.read.parquet(path)
         # an at-rest scan holds no persist; unpersist-on-evict is a no-op
         _cache_put(_SIG_STORE_CACHE, key, sigs_store,
-                   frame_of=lambda df: df, dirs=_SIG_STORE_DIRS)
+                   frame_of=lambda df: df, dirs=_SIG_STORE_DIRS, fp=fp)
     all_sigs = sigs_store.unionByName(
         dedup.portable_minhash_signatures(delivery)
     )
@@ -632,6 +634,32 @@ WHERE jaccard >= 0.5
 """
 
 
+# the verified n-gram Jaccard pair set (t = 0.5) per (applicationId,
+# sf_dir): five queries consume it — the pair list itself, both CC
+# algorithms, the triangle census and pagerank — and its PPJoin
+# pipeline (shingling, frequency order, prefix join, exact
+# verification) is the dominant cost of each. Built once, persisted
+# and fingerprinted like the index caches, so a replaced corpus
+# rebuilds instead of serving the old pairs. Value: the persisted
+# (id_a, id_b, jaccard) frame.
+_NGRAM_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
+
+
+def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`dedup.ngram_jaccard_pairs` over the corpus at threshold 0.5,
+    built and materialized once per (session, corpus); every hit
+    rechecks the corpus fingerprint taken before the build."""
+    docs = _docs(spark, sf_dir)
+    key = (spark.sparkContext.applicationId, sf_dir)
+    pairs = _cache_get_fresh(_NGRAM_PAIRS_CACHE, key, docs, lambda df: df)
+    if pairs is None:
+        fp = source_fingerprint(docs)
+        pairs = dedup.ngram_jaccard_pairs(docs, threshold=0.5).persist()
+        pairs._jdf.queryExecution().toRdd().count()
+        _cache_put(_NGRAM_PAIRS_CACHE, key, pairs, lambda df: df, fp=fp)
+    return pairs
+
+
 @register(
     "dedup_ngram_jaccard",
     extra=True,  # r6 rotation: EXT-dedup keeps five other driver rows and
@@ -642,8 +670,9 @@ WHERE jaccard >= 0.5
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard near-dup pairs via PPJoin-style prefix
-    filtering — hash-free, zero recall loss, fully oracle-checkable."""
-    return dedup.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
+    filtering — hash-free, zero recall loss, fully oracle-checkable.
+    Served from the session's pair artifact (`_ngram_pairs`)."""
+    return _ngram_pairs(spark, sf_dir)
 
 
 _CLUSTERS_ORACLE = f"""
@@ -675,7 +704,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     an ITERATIVE algorithm's fixpoint, not just one pass."""
     from crypto_data_pipeline_spark.operators.graph import connected_components
 
-    pairs = dedup.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
+    pairs = _ngram_pairs(spark, sf_dir)
     cc = connected_components(pairs, "id_a", "id_b")
     return cc.groupBy(F.col("component").alias("cluster_id")).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -713,7 +742,7 @@ def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     id-sum pin."""
     from crypto_data_pipeline_spark.operators.graph import triangle_count
 
-    pairs = dedup.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
+    pairs = _ngram_pairs(spark, sf_dir)
     return triangle_count(pairs, "id_a", "id_b")
 
 
@@ -728,7 +757,7 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalent."""
     from crypto_data_pipeline_spark.operators.graph import connected_components_star
 
-    pairs = dedup.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
+    pairs = _ngram_pairs(spark, sf_dir)
     cc = connected_components_star(pairs, "id_a", "id_b")
     return cc.groupBy(F.col("component").alias("cluster_id")).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -777,14 +806,19 @@ def doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the whole run is ONE differential query — DuckDB replays the
     identical unrolled iteration chain and the ranks hash-match at
     6 dp (the iteration is a contraction, so engine last-ulp noise
-    decays instead of compounding)."""
+    decays instead of compounding).
+
+    The pairs come from the session's pair artifact (`_ngram_pairs`),
+    so after any other near-dup graph query this one pays no PPJoin
+    work; pagerank checkpoints the symmetrized edge list and plans its
+    unrolled iterations statically over it."""
     from crypto_data_pipeline_spark.operators.graph import pagerank
 
-    pairs = dedup.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
+    pairs = _ngram_pairs(spark, sf_dir)
     # explode symmetrization, not a two-branch union (round 14, guide
     # §2.4 — same fix as connected_components): Catalyst does not share
-    # subtrees across union branches, so the union form evaluated the
-    # whole PPJoin pair pipeline twice inside pagerank's edge persist
+    # subtrees across union branches, so the union form scanned the
+    # pair list twice before pagerank's edge checkpoint
     both = F.array(
         F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
         F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
@@ -1617,6 +1651,7 @@ def _cache_put(
     value,
     frame_of,
     dirs: dict | None = None,
+    fp: dict | None = None,
 ) -> None:
     """Insert, evicting every other entry: stale keys — prior
     sessions' applicationIds or other sf_dirs — would otherwise pin
@@ -1632,7 +1667,12 @@ def _cache_put(
     and the old tuple's four persisted frames leaked for the session).
     The old entry's at-rest dir is deliberately NOT removed on a
     same-key overwrite: builders register dirs[key] before calling
-    here, so the dir entry may already be the NEW one."""
+    here, so the dir entry may already be the NEW one.
+
+    ``fp`` is the source fingerprint the builder took BEFORE building
+    (None = untracked); it is recorded here, with the value, for
+    `_cache_get_fresh` to recheck. An evicted key's fingerprint goes
+    with it, and a same-key overwrite replaces the old value's."""
     old = cache.get(key)
     if old is not None and old is not value:
         try:
@@ -1644,48 +1684,52 @@ def _cache_put(
             frame_of(cache.pop(k)).unpersist()
         except Exception:
             pass  # session already stopped; nothing to release
+        _CACHE_SOURCE_FPS.pop((id(cache), *k), None)
         if dirs is not None and k in dirs:
             import shutil
 
             shutil.rmtree(dirs.pop(k), ignore_errors=True)
     cache[key] = value
+    if fp is None:
+        _CACHE_SOURCE_FPS.pop((id(cache), *key), None)
+    else:
+        _CACHE_SOURCE_FPS[(id(cache), *key)] = fp
 
 
 # corpus fingerprints recorded beside index/store cache entries
 # (round 14, VERDICT r12 next #6 carry-over): the at-rest serve paths
 # must only ever serve the corpus state they were built from. Each
-# build records observability.source_fingerprint of its source frame;
-# every later cache hit re-checks it (one file listing + one os.stat
-# per input file — no data scan) and a mismatch reads as a MISS, so
-# the caller rebuilds and _cache_put releases the stale entry.
-_CACHE_SOURCE_FPS: dict[tuple, dict | None] = {}
+# build takes observability.source_fingerprint of its source frame and
+# hands it to _cache_put; every later cache hit re-checks it (one file
+# listing + one os.stat per input file — no data scan) and a mismatch
+# reads as a MISS, so the caller rebuilds and _cache_put releases the
+# stale entry.
+_CACHE_SOURCE_FPS: dict[tuple, dict] = {}
 
 
-def _cache_get_fresh(cache: dict, key: tuple, source_df: DataFrame):
+def _cache_get_fresh(cache: dict, key: tuple, source_df: DataFrame, frame_of):
     """cache[key], but only while the source corpus still matches the
     fingerprint recorded at build time; None (= rebuild) otherwise.
     Non-file-backed sources record a None fingerprint and skip the
-    check — generated fixtures have no stable at-rest identity."""
+    check — generated fixtures have no stable at-rest identity.
+
+    A stale entry is evicted here, its frames released through
+    ``frame_of`` (as in `_cache_put`), before the caller rebuilds. The
+    rebuild reads the same paths, so while a stale PERSISTED frame
+    stays in the CacheManager a rebuilt plan that canonicalizes equal
+    to it is served the old rows (a corpus replaced outside the
+    session triggers no recache); and a rebuild that raises leaves no
+    stale entry behind to be served later."""
     val = cache.get(key)
     if val is None:
         return None
     recorded = _CACHE_SOURCE_FPS.get((id(cache), *key))
-    if recorded is not None:
-        from crypto_data_pipeline_spark.observability import source_fingerprint
-
-        if source_fingerprint(source_df) != recorded:
-            return None
+    if recorded is not None and source_fingerprint(source_df) != recorded:
+        del cache[key]
+        del _CACHE_SOURCE_FPS[(id(cache), *key)]
+        frame_of(val).unpersist()
+        return None
     return val
-
-
-def _record_cache_source(cache: dict, key: tuple, source_df: DataFrame) -> dict | None:
-    """Record (and return) the source fingerprint for a cache entry
-    being built — the load-time half lives in `_cache_get_fresh`."""
-    from crypto_data_pipeline_spark.observability import source_fingerprint
-
-    fp = source_fingerprint(source_df)
-    _CACHE_SOURCE_FPS[(id(cache), *key)] = fp
-    return fp
 
 
 def _ivf_index_at_rest(
@@ -1704,7 +1748,8 @@ def _ivf_index_at_rest(
     eviction and process exit rmtree the dir."""
     key = (spark.sparkContext.applicationId, sf_dir)
     index = (
-        _cache_get_fresh(cache, key, source) if source is not None
+        _cache_get_fresh(cache, key, source, lambda ix: ix.assigned)
+        if source is not None
         else cache.get(key)
     )
     if index is None:
@@ -1716,12 +1761,12 @@ def _ivf_index_at_rest(
         # _cleanup_model_dirs atexit sweep (round 12, ADVICE; the
         # sweep's rmtree is ignore_errors, so tracking early is safe)
         dirs[key] = index_dir
-        fp = _record_cache_source(cache, key, source) if source is not None else None
+        fp = source_fingerprint(source) if source is not None else None
         built = build()
         similarity.write_ivf_index(built, index_dir, nprobe=4, source_fingerprint=fp)
         built.assigned.unpersist()
         index = similarity.read_ivf_index(spark, index_dir, expect_fingerprint=fp)
-        _cache_put(cache, key, index, lambda ix: ix.assigned, dirs=dirs)
+        _cache_put(cache, key, index, lambda ix: ix.assigned, dirs=dirs, fp=fp)
     return index
 
 
@@ -1742,7 +1787,7 @@ def _ivf_recommended_index(
     import math as _math
 
     key = (spark.sparkContext.applicationId, sf_dir)
-    got = _cache_get_fresh(_IVF_CACHE, key, embs)
+    got = _cache_get_fresh(_IVF_CACHE, key, embs, lambda t: t[0].assigned)
     if got is None:
         import tempfile
 
@@ -1751,7 +1796,7 @@ def _ivf_recommended_index(
         index_dir = tempfile.mkdtemp(prefix="ivf_index_")
         # registered before building — same leak guard as the sibling
         _IVF_DIRS[key] = index_dir
-        fp = _record_cache_source(_IVF_CACHE, key, embs)
+        fp = source_fingerprint(embs)
         built = similarity.build_ivf_index(embs, n_centroids=cells, n_total=n)
         serve = similarity.ivf_serving_nprobe(built)
         # round 13: the chooser's one-pass curve already measured the
@@ -1779,7 +1824,7 @@ def _ivf_recommended_index(
         index = similarity.read_ivf_index(spark, index_dir, expect_fingerprint=fp)
         got = (index, serve["nprobe"], cells)
         _cache_put(_IVF_CACHE, key, got, lambda t: t[0].assigned,
-                   dirs=_IVF_DIRS)
+                   dirs=_IVF_DIRS, fp=fp)
     return got
 
 
@@ -2352,11 +2397,11 @@ def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     hyperplanes inline into the DuckDB oracle (see _lsh_oracle)."""
     embs = _embs(spark, sf_dir)
     key = (spark.sparkContext.applicationId, sf_dir)
-    c_keys = _cache_get_fresh(_LSH_CACHE, key, embs)
+    c_keys = _cache_get_fresh(_LSH_CACHE, key, embs, lambda ix: ix.keys)
     if c_keys is None:
+        fp = source_fingerprint(embs)
         c_keys = similarity.build_lsh_keys(embs)
-        _record_cache_source(_LSH_CACHE, key, embs)
-        _cache_put(_LSH_CACHE, key, c_keys, lambda ix: ix.keys)
+        _cache_put(_LSH_CACHE, key, c_keys, lambda ix: ix.keys, fp=fp)
     queries = embs.where(F.col("vec_id") < 10).select(F.col("vec_id").alias("query_id"), "embedding")
     return similarity.lsh_topk(embs, queries, k=5, corpus_keys=c_keys)
 
@@ -2386,11 +2431,11 @@ def embedding_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe set (see _lsh_multiprobe_oracle)."""
     embs = _embs(spark, sf_dir)
     key = (spark.sparkContext.applicationId, sf_dir)
-    c_keys = _cache_get_fresh(_LSH_CACHE, key, embs)
+    c_keys = _cache_get_fresh(_LSH_CACHE, key, embs, lambda ix: ix.keys)
     if c_keys is None:
+        fp = source_fingerprint(embs)
         c_keys = similarity.build_lsh_keys(embs)
-        _record_cache_source(_LSH_CACHE, key, embs)
-        _cache_put(_LSH_CACHE, key, c_keys, lambda ix: ix.keys)
+        _cache_put(_LSH_CACHE, key, c_keys, lambda ix: ix.keys, fp=fp)
     queries = embs.where(F.col("vec_id") < 10).select(F.col("vec_id").alias("query_id"), "embedding")
     return similarity.lsh_topk(embs, queries, k=5, corpus_keys=c_keys, probes_per_table=2)
 
@@ -4519,18 +4564,19 @@ def embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     match proves served codes ≡ fresh encode."""
     embs = _embs(spark, sf_dir)
     key = (spark.sparkContext.applicationId, sf_dir)
-    got = _cache_get_fresh(_PQ_CODES_CACHE, key, embs)
+    got = _cache_get_fresh(_PQ_CODES_CACHE, key, embs, lambda t: t[1])
     if got is None:
         import tempfile
 
         codes_dir = tempfile.mkdtemp(prefix="pq_codes_")
         # registered before building — same leak guard as the siblings
         _PQ_CODES_DIRS[key] = codes_dir
-        _record_cache_source(_PQ_CODES_CACHE, key, embs)
+        fp = source_fingerprint(embs)
         books = similarity.build_fixed_pq_codebook(embs, list(range(16)), m=8)
         similarity.pq_encode(embs, books).write.mode("overwrite").parquet(codes_dir)
         got = (books, spark.read.parquet(codes_dir))
-        _cache_put(_PQ_CODES_CACHE, key, got, lambda t: t[1], dirs=_PQ_CODES_DIRS)
+        _cache_put(_PQ_CODES_CACHE, key, got, lambda t: t[1], dirs=_PQ_CODES_DIRS,
+                   fp=fp)
     books, codes = got
     queries = embs.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"

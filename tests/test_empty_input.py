@@ -138,3 +138,27 @@ def test_literal_frame_matches_createdataframe(spark):
 
     empty = literal_frame(spark, [], schema)
     assert empty.schema == ref.schema and empty.count() == 0
+
+
+def test_pagerank_on_empty_edges_releases_and_restores(spark, empty_dir):
+    """An empty near-dup graph: pagerank over an empty edge list and
+    doc_pagerank over an empty corpus return empty frames, leave no
+    persisted frame behind (doc_pagerank keeps only the session's pair
+    artifact) and leave the loop conf keys exactly as found."""
+    from crypto_data_pipeline_spark.operators.graph import pagerank
+    from crypto_data_pipeline_spark.plans import extension_queries as eq
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    conf = {k: spark.conf.get(k, None) for k in keys}
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    n0 = cm.numCachedEntries()
+    edges = spark.createDataFrame([], "src long, dst long")
+    ranks = pagerank(edges, iters=5)
+    assert ranks.columns == ["id", "rank"] and ranks.count() == 0
+    assert cm.numCachedEntries() == n0
+    assert {k: spark.conf.get(k, None) for k in keys} == conf
+
+    evicts_prior = bool(eq._NGRAM_PAIRS_CACHE)
+    assert eq.doc_pagerank(spark, empty_dir).collect() == []
+    assert cm.numCachedEntries() == n0 + 1 - evicts_prior
+    assert {k: spark.conf.get(k, None) for k in keys} == conf

@@ -107,3 +107,49 @@ def test_triangle_count_known_graphs(spark):
     star = [(0, i) for i in range(1, 9)]
     assert tri(star) == (0, 0)
     assert tri([(1, 2), (2, 3), (1, 3), (3, 9)]) == (1, 6)
+
+
+_LOOP_KEYS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+
+def _loop_conf(spark) -> dict:
+    return {k: spark.conf.get(k, None) for k in _LOOP_KEYS}  # None = unset
+
+
+@pytest.mark.parametrize("preset", ["set", "unset"])
+def test_iterative_loops_leave_conf_as_found(spark, preset):
+    """pagerank and connected_components plan their loops under
+    `_iterative_loop_conf`; afterwards both keys must be exactly as
+    found — a set key keeps its value, an unset key is unset again —
+    on return and when the loop body raises."""
+    from pyspark.errors import AnalysisException
+
+    from crypto_data_pipeline_spark.operators.graph import pagerank
+
+    saved = _loop_conf(spark)
+    try:
+        for k in _LOOP_KEYS:
+            spark.conf.unset(k)
+        if preset == "set":
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
+            spark.conf.set("spark.sql.shuffle.partitions", "7")
+        want = _loop_conf(spark)
+        edges = spark.createDataFrame(
+            [(0, 1), (1, 0), (1, 2), (2, 1)], "src long, dst long"
+        )
+        assert pagerank(edges, iters=3).count() == 3
+        assert _loop_conf(spark) == want
+        assert _cc(spark, [(0, 1), (1, 2)]) == {0: 0, 1: 0, 2: 0}
+        assert _loop_conf(spark) == want
+        with pytest.raises(RuntimeError, match="did not converge"):
+            _cc(spark, [(i, i + 1) for i in range(30)], max_iter=2)
+        assert _loop_conf(spark) == want
+        with pytest.raises(AnalysisException):
+            pagerank(edges, dst="no_such_column")
+        assert _loop_conf(spark) == want
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
