@@ -95,9 +95,17 @@ def source_fingerprint(df: DataFrame) -> dict | None:
     non-file-backed frames (generated fixtures), where no stable
     at-rest identity exists; callers skip the check. Cost: one driver
     file listing (cached by the scan relation) + one os.stat per input
-    file — no executor work, no data scan."""
+    file — no executor work, no data scan.
+
+    ``inputFiles()`` are URL-encoded URIs (a space reads ``%20``), so a
+    path is decoded before the stat. A guard that degrades says so: an
+    input on a non-local filesystem returns None (guard off) with a
+    warning, and a local file that cannot be stat'ed is warned about by
+    name — its size and mtime changes go undetected."""
     import hashlib
     import os
+    import warnings
+    from urllib.parse import unquote, urlsplit
 
     files = sorted(df.inputFiles())
     if not files:
@@ -105,13 +113,27 @@ def source_fingerprint(df: DataFrame) -> dict | None:
     h = hashlib.sha256()
     total = 0
     for f in files:
-        p = f[5:] if f.startswith("file:") else f  # strip scheme, keep slashes
+        url = urlsplit(f)
+        if url.scheme not in ("", "file"):
+            warnings.warn(
+                f"source_fingerprint: {f} is not a local file; the staleness "
+                "guard is off for this source",
+                stacklevel=2,
+            )
+            return None
+        p = unquote(url.path)
         try:
             st = os.stat(p)
+        except OSError as exc:
+            warnings.warn(
+                f"source_fingerprint: cannot stat {p} ({exc.strerror}); a "
+                "change to its size or mtime will go undetected",
+                stacklevel=2,
+            )
+            sig = f"{f}|unstat-able"
+        else:
             sig = f"{f}|{st.st_size}|{st.st_mtime_ns}"
             total += st.st_size
-        except OSError:
-            sig = f"{f}|unstat-able"
         h.update(sig.encode())
     return {"n_files": len(files), "total_bytes": total, "sha256": h.hexdigest()}
 

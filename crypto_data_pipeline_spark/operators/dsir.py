@@ -258,7 +258,8 @@ def dsir_kth_weight(
     n_bins: int = 4096,
 ) -> float:
     """EXACT k-th largest weight (k = ceil(n·keep_fraction), duplicates
-    counted) as a driver scalar — the scale-safe selection boundary.
+    counted, n the number of non-NULL weights) as a driver scalar — the
+    scale-safe selection boundary.
 
     This is the histogram-refine formulation of a distributed k-th
     order statistic: weights are 6-dp-rounded by contract
@@ -312,10 +313,13 @@ def dsir_kth_weight(
     import math
 
     w_int = F.round(F.col(weight_col) * 1e6, 0).cast("long")
-    # floor-div bins are exact on longs at any magnitude (no double
-    # quotient here, unlike the range-relative binning below)
+    # floor(w_int / n_bins) in long arithmetic, exact at any magnitude:
+    # a double quotient rounds once |w_int| > 2^53. SQL `div` truncates
+    # toward zero, and weights are signed, so the dividend is first
+    # moved down to a multiple of n_bins (pmod is never negative).
+    bin_col = F.call_function("div", w_int - F.pmod(w_int, F.lit(n_bins)), F.lit(n_bins))
     pass1 = (
-        weighted.groupBy((F.floor(w_int / F.lit(n_bins))).alias("bin"))
+        weighted.groupBy(bin_col.alias("bin"))
         .agg(
             F.count(F.lit(1)).alias("c"),
             F.min(w_int).alias("mn"),
@@ -323,6 +327,9 @@ def dsir_kth_weight(
         )
         .collect()
     )
+    # a NULL weight lands in the NULL bin; it can never satisfy
+    # weight >= cutoff, so it is not ranked (k counts non-NULL weights)
+    pass1 = [r for r in pass1 if r.bin is not None]
     n = sum(r.c for r in pass1)
     k = min(math.ceil(n * keep_fraction), n)
     if n == 0 or k <= 0:

@@ -16,6 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from crypto_data_pipeline_spark.plans.registry import register
+from crypto_data_pipeline_spark.sources.json_dir import read_child_dir_json
 from crypto_data_pipeline_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -205,20 +206,9 @@ def json_roundtrip_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     path = tempfile.mkdtemp(prefix="json_tree_")
     docs.select("doc_id", "text", "lang").write.partitionBy("lang").mode("overwrite").json(path)
-    try:
-        base = (
-            spark.read.schema("doc_id long, text string")
-            .json(f"{path}/*/*.json")
-            .withColumn("_file", F.input_file_name())
-        )
-    except Exception as exc:
-        if "PATH_NOT_FOUND" not in str(exc):
-            raise
-        # zero input docs -> the partitioned write emits no files; an
-        # empty tree reads as an empty frame, mirroring the oracle
-        base = spark.createDataFrame([], "doc_id long, text string").withColumn(
-            "_file", F.lit("").cast("string")
-        )
+    # zero input docs -> the partitioned write emits no lang= dirs; the
+    # empty tree reads as an empty frame, mirroring the oracle
+    base = read_child_dir_json(spark, path, "doc_id long, text string")
     raw = base.withColumn(
         "lang", F.regexp_extract("_file", r"lang=([^/]+)/", 1)
     ).withColumn("created_at", F.current_timestamp())

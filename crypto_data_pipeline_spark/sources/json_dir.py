@@ -5,12 +5,21 @@ The reference stores one pretty-printed JSON file per (coin, day) at
 re-loads the tree with a Python glob loop parsing dates out of
 filenames (load_data.py:112-129,45-53).
 
-Spark re-design: ONE distributed ``spark.read.json`` over the whole
-tree — coin and date are recovered from ``input_file_name()`` with a
-regexp, not with a driver-side loop; schema is supplied explicitly
-(schema-on-read inference would scan the tree twice)."""
+Spark re-design: one distributed ``spark.read.json`` over the coin
+DIRECTORIES of the tree (read_child_dir_json): the driver lists the
+root's direct child directories and hands them to the reader with a
+``*.json`` file filter, so file listing scales with the number of
+coins, not coin-days. The leaf-file glob ``<root>/*/*.json`` would
+instead expand into one root path per FILE, which Spark re-stats in a
+listing job with one task per file once there are more than
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32). Coin
+and date are recovered from ``input_file_name()`` with a regexp, not
+with a driver-side loop; schema is supplied explicitly (schema-on-read
+inference would scan the tree twice)."""
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -39,30 +48,64 @@ COIN_HISTORY_PAYLOAD = T.StructType(
 _FILE_RE = r"([^/]+)_(\d{4}-\d{2}-\d{2})\.json$"
 
 
+# Hadoop's glob metacharacters: DataFrameReader globs every path it is
+# given, so a listed directory is escaped to be read literally.
+_GLOB_META = re.compile(r"([\\{}\[\]*?])")
+
+
+def read_child_dir_json(
+    spark: SparkSession, root: str, schema: T.StructType | str, **options: str
+) -> DataFrame:
+    """The ``*.json`` files directly inside each direct child directory
+    of ``root`` — the file set of the glob ``<root>/*/*.json`` — read
+    with ``schema``, plus ``_file`` (the file's URI).
+
+    The root is listed with ``FileSystem.listStatus`` (taken literally,
+    never globbed) and only its directories are passed to the reader,
+    glob-escaped. A file at the root is not read (it is not in a child
+    directory), nor is one nested deeper: with no partition columns
+    and ``recursiveFileLookup`` off, Spark reads only the direct
+    children of each path it is given. Spark lists the directories on
+    the driver up to ``parallelPartitionDiscovery.threshold`` of them
+    and with one task per DIRECTORY above it.
+
+    A missing root, or one without child directories, is a valid empty
+    tree (first run, nothing fetched yet): the frame is empty and its
+    ``_file`` is a NULL literal, not '' — a '' literal constant-folds
+    through to_date('') in read_bronze_json at PLAN time, which ANSI
+    mode rejects even on a zero-row frame (found by
+    tests/test_cli.py::test_run_pipeline_empty_tree_fails_loud)."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(root)
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    dirs = sorted(
+        _GLOB_META.sub(r"\\\1", st.getPath().toString())
+        for st in (fs.listStatus(path) if fs.exists(path) else [])
+        if st.isDirectory()
+    )
+    if not dirs:
+        return spark.createDataFrame([], schema).withColumn(
+            "_file", F.lit(None).cast("string")
+        )
+    return (
+        spark.read.schema(schema)
+        .option("pathGlobFilter", "*.json")
+        .options(**options)
+        .json(dirs)
+        .withColumn("_file", F.input_file_name())
+    )
+
+
 def read_bronze_json(spark: SparkSession, root: str) -> DataFrame:
     """Distributed scan of data/<coin>/<coin>_<date>.json with (coin,
     date) recovered from the path — the Spark twin of
-    load_data.py:112-129. Returns coin_id, fetch_date, price_usd,
-    market_cap_usd, total_volume_usd, response (full struct)."""
-    try:
-        raw = (
-            spark.read.schema(COIN_HISTORY_PAYLOAD)
-            .option("multiLine", "true")  # reference writes pretty-printed JSON
-            .json(f"{root}/*/*.json")
-            .withColumn("_file", F.input_file_name())
-        )
-    except Exception as exc:  # AnalysisException; Spark-version-stable match
-        if "PATH_NOT_FOUND" not in str(exc):
-            raise
-        # an empty bronze tree is a valid state (first run, nothing
-        # fetched yet) — yield the empty frame, not a crash. The _file
-        # placeholder must be a NULL literal, not '': a '' literal
-        # constant-folds through to_date('') below at PLAN time, which
-        # ANSI mode rejects even on a zero-row frame (found by
-        # tests/test_cli.py::test_run_pipeline_empty_tree_fails_loud)
-        raw = spark.createDataFrame([], COIN_HISTORY_PAYLOAD).withColumn(
-            "_file", F.lit(None).cast("string")
-        )
+    load_data.py:112-129. The reader is handed the coin directories,
+    not the coin-day files (read_child_dir_json), so listing costs one
+    ``listStatus`` per coin. A missing or empty root yields an empty
+    frame. Returns coin_id, fetch_date, price_usd, market_cap_usd,
+    total_volume_usd, response (full struct)."""
+    # the reference writes pretty-printed JSON
+    raw = read_child_dir_json(spark, root, COIN_HISTORY_PAYLOAD, multiLine="true")
     # Only <name>_YYYY-MM-DD.json filenames carry the (coin, date) key —
     # the distributed twin of the reference's per-coin filename glob
     # (load_data.py:112-129), which likewise never reads a stray

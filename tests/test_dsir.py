@@ -295,6 +295,33 @@ def test_kth_weight_random_property_sweep(spark):
         assert got == want, (case, n, frac, n_bins, got, want)
 
 
+def test_kth_weight_exact_beyond_2_53_and_under_null_weights(spark):
+    """Pass-1 binning is long floor division: weights whose w_int =
+    weight·1e6 lies beyond ±2^53 (where a double quotient rounds), of
+    both signs, with ties, still give the sorted-rank k-th exactly.
+    NULL weights are not ranked — k counts the non-NULL weights — and
+    an all-NULL frame yields +inf instead of a driver-sort TypeError."""
+    import math
+    import random
+
+    rng = random.Random(7)
+    # 2^34 + j/4: w_int ≈ ±1.7e16 > 2^53, and every product is exact
+    big = [s * (2.0**34 + rng.randint(0, 40) / 4) for s in (1, -1) for _ in range(30)]
+    assert min(abs(w) * 1e6 for w in big) > 2**53
+    cases = [(big, []), (big, [None] * 5), ([1.5, -2.25, 1.5, 0.0], [None] * 3)]
+    for ws, nulls in cases:
+        weighted = spark.createDataFrame(
+            list(enumerate(ws + nulls)), "doc_id int, weight double"
+        )
+        for frac in (0.1, 0.5, 1.0):
+            for n_bins in (3, 4096):
+                got = dsir.dsir_kth_weight(weighted, frac, n_bins=n_bins)
+                k = min(math.ceil(len(ws) * frac), len(ws))
+                assert got == sorted(ws, reverse=True)[k - 1], (len(nulls), frac, n_bins)
+    all_null = spark.createDataFrame([(0, None), (1, None)], "doc_id int, weight double")
+    assert dsir.dsir_kth_weight(all_null, 0.5) == float("inf")
+
+
 def test_gumbel_quantile_matches_gumbel_rank_kept_set(spark, fixture_df):
     """The Gumbel scale path selects the identical set the rank twin
     selects (keys carry hash noise — no boundary ties on the fixture)

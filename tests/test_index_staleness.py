@@ -40,6 +40,37 @@ def test_source_fingerprint_tracks_file_changes(spark, tmp_path):
     assert source_fingerprint(spark.range(3)) is None
 
 
+def test_source_fingerprint_decodes_paths_and_warns_when_degraded(spark, tmp_path):
+    """inputFiles() URIs are URL-encoded (a space is %20): the guard decodes
+    them, so an mtime-only change under such a directory is seen. When
+    it cannot see a file, or the files are not local, it warns."""
+    import warnings
+
+    p = str(tmp_path / "dir with space" / "corpus")
+    _write_corpus(spark, p)
+    df = spark.read.parquet(p)
+    assert any("%20" in f for f in df.inputFiles())
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        fp1 = source_fingerprint(df)
+    assert fp1["total_bytes"] > 0
+    part = next(f for f in os.listdir(p) if f.endswith(".parquet"))
+    st = os.stat(os.path.join(p, part))
+    os.utime(os.path.join(p, part), ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert source_fingerprint(spark.read.parquet(p)) != fp1
+
+    os.remove(os.path.join(p, part))
+    with pytest.warns(UserWarning, match=f"cannot stat .*{part}"):
+        source_fingerprint(df)
+
+    class _Remote:
+        def inputFiles(self):
+            return ["s3a://bucket/corpus/part-0.parquet"]
+
+    with pytest.warns(UserWarning, match="not a local file"):
+        assert source_fingerprint(_Remote()) is None
+
+
 def test_ivf_read_raises_on_stale_fingerprint(spark, tmp_path):
     corpus = str(tmp_path / "corpus")
     _write_corpus(spark, corpus)

@@ -67,6 +67,74 @@ def test_bronze_json_roundtrip(spark, tmp_path):
     assert os.path.isdir(f"{out}/coin_id=bitcoin/fetch_date=2025-01-01")
 
 
+def test_bronze_json_root_is_taken_literally(spark, tmp_path):
+    """A root holding glob characters reads every file (the leaf-file
+    glob used to match nothing there and return 0 rows); a missing root
+    and a root without coin directories read as empty frames."""
+    root = str(tmp_path / "with space [x]")
+    _write_reference_layout(root)
+    assert json_dir.read_bronze_json(spark, root).count() == 4
+
+    missing = json_dir.read_bronze_json(spark, str(tmp_path / "missing"))
+    assert missing.collect() == []
+    assert missing.columns == json_dir.read_bronze_json(spark, root).columns
+    flat = tmp_path / "flat"
+    flat.mkdir()
+    (flat / "bitcoin_2025-01-01.json").write_text(json.dumps(_payload("bitcoin", 1.0, 2.0)))
+    assert json_dir.read_bronze_json(spark, str(flat)).collect() == []
+
+
+def _write_wide_layout_with_strays(root: str) -> set[tuple[str, str]]:
+    """2 coins x 20 days (above the 32-path parallel-listing threshold)
+    plus four files outside the ``<root>/<coin>/<name>_<date>.json``
+    set; returns the (coin, date) keys that set holds."""
+    keys = set()
+    for coin in ("bitcoin", "cardano"):
+        os.makedirs(f"{root}/{coin}", exist_ok=True)
+        for d in range(1, 21):
+            day = f"2025-01-{d:02d}"
+            with open(f"{root}/{coin}/{coin}_{day}.json", "w") as fh:
+                json.dump(_payload(coin, float(d), 1e9), fh, indent=4)
+            keys.add((coin, day))
+    os.makedirs(f"{root}/bitcoin/old")
+    for stray in ("bitcoin_2025-01-03.json", "bitcoin/old/bitcoin_2024-12-31.json",
+                  "bitcoin/notes.txt", "bitcoin/bitcoin_latest.json"):
+        with open(f"{root}/{stray}", "w") as fh:
+            json.dump(_payload("bitcoin", -1.0, 1e9), fh, indent=4)
+    return keys
+
+
+def test_bronze_json_reads_exactly_the_coin_day_files(spark, tmp_path):
+    """Root-level, nested, non-JSON and non-dated files stay out: the
+    rows are exactly the depth-2 ``<name>_<date>.json`` documents."""
+    root = str(tmp_path / "data")
+    keys = _write_wide_layout_with_strays(root)
+    rows = json_dir.read_bronze_json(spark, root).collect()
+    assert sorted((r.coin_id, str(r.fetch_date)) for r in rows) == sorted(keys)
+    assert all(r.price_usd > 0 for r in rows)
+
+
+def test_bronze_json_build_launches_no_listing_job(spark, tmp_path):
+    """Building the bronze frame over 40+ files runs no Spark job: the
+    reader gets the coin directories, listed on the driver, not one
+    root path per file re-stat'ed by a task per file."""
+    root = str(tmp_path / "data")
+    keys = _write_wide_layout_with_strays(root)
+    sc = spark.sparkContext
+
+    def job_ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = job_ids()
+    df = json_dir.read_bronze_json(spark, root)
+    built = job_ids()
+    assert built == before
+    assert df.count() == len(keys)
+    # the scan, and under AQE the final aggregate after its shuffle
+    assert 1 <= len(job_ids() - built) <= 2
+
+
 def test_csv_roundtrip(spark, tmp_path):
     path = str(tmp_path / "csv")
     df = spark.createDataFrame(
