@@ -20,6 +20,7 @@ uncached construction (same expression tree handed to the analyzer).
 
 from __future__ import annotations
 
+import types
 from collections.abc import Callable
 from typing import Hashable
 
@@ -44,18 +45,29 @@ def _build_fingerprint(build: Callable[[], Column]) -> tuple:
     bytecode and (b) the hashable values of its closure cells — so a
     parameter captured by the build closure (the only way parameters
     reach these zero-arg builders) distinguishes cache entries even
-    when the explicit key forgets it. Unhashable cell contents (e.g. a
-    captured Column) degrade to their type name: correctness is
-    preserved for the primitive config params this guards, and a
-    builder capturing live Columns should not be memoized anyway."""
+    when the explicit key forgets it. Bytecode alone does not carry
+    values: ``lambda: F.lit(3)`` and ``lambda: F.lit(5)`` share
+    ``co_code``, so the key also holds the code's constants and names
+    and the values of the module globals it names. Unhashable values
+    (e.g. a captured Column, a module) degrade to their type name:
+    correctness is preserved for the primitive config params this
+    guards, and a builder capturing live Columns should not be memoized
+    anyway."""
     def hashable(v) -> Hashable:
         if isinstance(v, (int, float, bool, str, bytes, frozenset, type(None))):
-            return v
+            return type(v).__name__, v  # 1, 1.0 and True are equal keys
         if isinstance(v, tuple):
             return tuple(hashable(x) for x in v)
+        if isinstance(v, types.CodeType):
+            return (v.co_code, hashable(v.co_consts), v.co_names)
         return type(v).__name__
 
-    code_id: Hashable = getattr(getattr(build, "__code__", None), "co_code", None)
+    code = getattr(build, "__code__", None)
+    code_id: Hashable = hashable(code)
+    env = getattr(build, "__globals__", {})
+    named = tuple(
+        (n, hashable(env[n])) for n in getattr(code, "co_names", ()) if n in env
+    )
     cells = []
     for cell in getattr(build, "__closure__", None) or ():
         try:
@@ -63,7 +75,7 @@ def _build_fingerprint(build: Callable[[], Column]) -> tuple:
         except ValueError:  # empty cell
             cells.append("<empty>")
     defaults = tuple(hashable(v) for v in getattr(build, "__defaults__", None) or ())
-    return (code_id, tuple(cells), defaults)
+    return (code_id, named, tuple(cells), defaults)
 
 
 def memo_expr(key: tuple[Hashable, ...], build: Callable[[], Column]) -> Column:

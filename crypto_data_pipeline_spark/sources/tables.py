@@ -65,6 +65,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def table_files(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The files of one table as a schema-free frame: the same
+    ``inputFiles()`` as ``load_table``, for the staleness checks of
+    `artifacts.get_or_build`. Unlike ``load_table`` it reads no parquet
+    footer, so it launches no Spark job."""
+    return spark.read.format("binaryFile").load(f"{sf_dir}/{name}.parquet")
+
+
 def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``load_table(..., "events")``: a readStream
     over the same parquet file with ``ts`` normalized to TIMESTAMP.

@@ -145,6 +145,7 @@ def test_pagerank_on_empty_edges_releases_and_restores(spark, empty_dir):
     doc_pagerank over an empty corpus return empty frames, leave no
     persisted frame behind (doc_pagerank keeps only the session's pair
     artifact) and leave the loop conf keys exactly as found."""
+    from crypto_data_pipeline_spark import artifacts
     from crypto_data_pipeline_spark.operators.graph import pagerank
     from crypto_data_pipeline_spark.plans import extension_queries as eq
 
@@ -158,7 +159,7 @@ def test_pagerank_on_empty_edges_releases_and_restores(spark, empty_dir):
     assert cm.numCachedEntries() == n0
     assert {k: spark.conf.get(k, None) for k in keys} == conf
 
-    evicts_prior = bool(eq._NGRAM_PAIRS_CACHE)
+    evicts_prior = any(e["name"] == "ngram_pairs" for e in artifacts.inventory())
     assert eq.doc_pagerank(spark, empty_dir).collect() == []
     assert cm.numCachedEntries() == n0 + 1 - evicts_prior
     assert {k: spark.conf.get(k, None) for k in keys} == conf

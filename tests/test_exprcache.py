@@ -6,6 +6,7 @@ forgets the parameter (VERDICT r13 what's-wrong #5)."""
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import functions as F
 
@@ -65,6 +66,37 @@ def test_differing_builder_code_never_shares(spark):
     df = spark.range(1).select(F.lit(10).alias("x"))
     assert df.select(add).first().y == 11
     assert df.select(sub).first().y == 9
+
+
+def test_differing_literals_never_share(spark):
+    """Same bytecode, different constants: the literal is in co_consts,
+    not co_code."""
+    key = _fresh_key("literal")
+    three = memo_expr(key, lambda: F.lit(3).alias("y"))
+    five = memo_expr(key, lambda: F.lit(5).alias("y"))
+    assert three is not five
+    assert spark.range(1).select(three).first().y == 3
+    assert spark.range(1).select(five).first().y == 5
+
+
+_MULT = 3
+
+
+def test_differing_globals_never_share(spark, monkeypatch):
+    """Same bytecode, no closure: the parameter is a module global the
+    builder names."""
+    key = _fresh_key("global")
+
+    def build():
+        return memo_expr(key, lambda: (F.col("x") * F.lit(_MULT)).alias("y"))
+
+    c3 = build()
+    monkeypatch.setattr(sys.modules[__name__], "_MULT", 5)
+    c5 = build()
+    assert c3 is not c5
+    df = spark.range(1).select(F.lit(10).alias("x"))
+    assert df.select(c3).first().y == 30
+    assert df.select(c5).first().y == 50
 
 
 def test_opt_out_env_builds_fresh(spark, monkeypatch):

@@ -1,7 +1,8 @@
 """At-rest index staleness guard (round 14, VERDICT r12 next #6
 carry-over): every index/store sidecar records the corpus fingerprint
-it was built from, loads re-check it, and the session caches treat a
-changed corpus as a miss instead of serving stale results."""
+it was built from, loads re-check it, and the session-artifact store
+(`artifacts.get_or_build`) treats a changed corpus as a miss instead of
+serving stale results."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from crypto_data_pipeline_spark import artifacts
 from crypto_data_pipeline_spark.observability import source_fingerprint
 from crypto_data_pipeline_spark.operators import similarity
 
@@ -110,84 +112,170 @@ def test_lsh_read_raises_on_stale_fingerprint(spark, tmp_path):
         similarity.read_lsh_index(spark, at_rest, expect_fingerprint=fp_new)
 
 
-def test_cache_get_fresh_invalidates_on_corpus_change(spark, tmp_path):
-    """The session-cache half: a cached entry whose recorded source
-    fingerprint no longer matches the live corpus reads as a MISS, and
-    a fingerprint never outlives its entry."""
-    from crypto_data_pipeline_spark.plans.extension_queries import (
-        _CACHE_SOURCE_FPS,
-        _cache_get_fresh,
-        _cache_put,
-    )
+def _live(name: str) -> list[dict]:
+    return [e for e in artifacts.inventory() if e["name"] == name]
 
-    def fresh(cache, key, df):
-        return _cache_get_fresh(cache, key, df, lambda v: v)
 
+def _n_builds(name: str) -> int:
+    return sum(r["name"] == name for r in artifacts.BUILD_LOG)
+
+
+def test_store_rebuilds_on_corpus_change(spark, tmp_path):
+    """Every hit rechecks the source fingerprint taken before the build:
+    a changed corpus reads as a miss and rebuilds, a build evicts the
+    other keys of its name, and a fingerprint never outlives its
+    entry."""
     corpus = str(tmp_path / "corpus")
     _write_corpus(spark, corpus)
-    cache: dict = {}
-    key = ("app", corpus)
+    builds = []
 
-    def put_index():
-        index = spark.range(1)
-        fp = source_fingerprint(spark.read.parquet(corpus))
-        _cache_put(cache, key, index, lambda v: v, fp=fp)
-        return index
+    def get(sf_dir, source):
+        def build():
+            builds.append(sf_dir)
+            return spark.range(len(builds))
 
-    index = put_index()
-    assert fresh(cache, key, spark.read.parquet(corpus)) is index
+        return artifacts.get_or_build(spark, sf_dir, "test_index", source, build)
+
+    index = get(corpus, spark.read.parquet(corpus))
+    assert get(corpus, spark.read.parquet(corpus)) is index
     # entries built from non-file-backed sources skip the check
-    gen_key = ("app", "generated")
-    gen = spark.range(2)
-    _cache_put(cache, gen_key, gen, lambda v: v, fp=source_fingerprint(spark.range(5)))
-    assert fresh(cache, gen_key, spark.range(5)) is gen
-    # that put evicted `key`, and its fingerprint with it
-    assert key not in cache
-    assert (id(cache), *key) not in _CACHE_SOURCE_FPS
-    put_index()
+    gen = get("generated", spark.range(5))
+    assert get("generated", spark.range(5)) is gen
+    # that build evicted the corpus entry, and its fingerprint with it
+    assert [(e["sf_dir"], e["source"]) for e in _live("test_index")] == [("generated", None)]
+    index = get(corpus, spark.read.parquet(corpus))
+    old_source = _live("test_index")[0]["source"]
     time.sleep(0.05)
     _write_corpus(spark, corpus, shift=3.0)
-    assert fresh(cache, key, spark.read.parquet(corpus)) is None
-    # the stale miss evicts the entry and its fingerprint
-    assert key not in cache
-    assert (id(cache), *key) not in _CACHE_SOURCE_FPS
-    # a same-key overwrite replaces the old value's fingerprint
-    put_index()
-    assert (id(cache), *key) in _CACHE_SOURCE_FPS
-    _cache_put(cache, key, spark.range(4), lambda v: v)
-    assert (id(cache), *key) not in _CACHE_SOURCE_FPS
+    rebuilt = get(corpus, spark.read.parquet(corpus))
+    assert rebuilt is not index and len(builds) == 4
+    # the stale miss evicted the entry; the rebuild records the new
+    # fingerprint in place of the old one and serves the next hit
+    [entry] = _live("test_index")
+    new_fp = source_fingerprint(spark.read.parquet(corpus))
+    assert entry["source"] != old_source
+    assert entry["source"]["sha256"] == new_fp["sha256"][:16]
+    assert get(corpus, spark.read.parquet(corpus)) is rebuilt and len(builds) == 4
 
 
-def test_cache_get_fresh_evicts_stale_persisted_frame(spark, tmp_path):
-    """A stale PERSISTED entry leaves the CacheManager on the miss. A
-    rebuild over the same path otherwise matches the stale cached plan
-    and reads the old rows: a file replaced outside the session (here
-    by pyarrow) triggers no Spark recache."""
+def test_store_evicts_stale_persisted_frame(spark, tmp_path):
+    """A stale PERSISTED entry leaves the CacheManager before the
+    rebuild. A rebuild over the same path otherwise matches the stale
+    cached plan and reads the old rows: a file replaced outside the
+    session (here by pyarrow) triggers no Spark recache."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from crypto_data_pipeline_spark.plans.extension_queries import (
-        _cache_get_fresh,
-        _cache_put,
-    )
 
     path = str(tmp_path / "ids.parquet")
     pq.write_table(pa.table({"id": [1, 2, 3]}), path)
 
-    def build():
-        return spark.read.parquet(path).selectExpr("id * 2 AS x").persist()
+    def get():
+        return artifacts.get_or_build(
+            spark, path, "test_frame", spark.read.parquet(path),
+            lambda: spark.read.parquet(path).selectExpr("id * 2 AS x").persist(),
+        )
 
-    cache: dict = {}
-    key = ("app", path)
-    built = build()
+    built = get()
     assert built.count() == 3
-    _cache_put(cache, key, built, lambda v: v,
-               fp=source_fingerprint(spark.read.parquet(path)))
     time.sleep(0.05)
     pq.write_table(pa.table({"id": [10, 20]}), path)
-    assert _cache_get_fresh(cache, key, spark.read.parquet(path), lambda v: v) is None
-    assert key not in cache
-    assert sorted(r.x for r in build().collect()) == [20, 40]
+    again = get()
+    assert again is not built and len(_live("test_frame")) == 1
+    assert sorted(r.x for r in again.collect()) == [20, 40]
+
+
+def test_store_removes_the_old_directory_on_a_stale_rebuild(spark, tmp_path):
+    corpus = str(tmp_path / "corpus")
+    _write_corpus(spark, corpus)
+    dirs = []
+
+    def get():
+        def build(d):
+            dirs.append(d)
+            return d
+
+        return artifacts.get_or_build(
+            spark, corpus, "test_at_rest", spark.read.parquet(corpus), build,
+            at_rest=True,
+        )
+
+    first = get()
+    assert os.path.isdir(first) and get() == first
+    time.sleep(0.05)
+    _write_corpus(spark, corpus, shift=1.0)
+    second = get()
+    assert dirs == [first, second]
+    assert not os.path.exists(first) and os.path.isdir(second)
+    assert [e["dir"] for e in _live("test_at_rest")] == [second]
+
+
+def test_store_raising_build_leaves_no_directory_and_no_entry(spark, tmp_path):
+    corpus = str(tmp_path / "corpus")
+    _write_corpus(spark, corpus)
+    dirs = []
+    n0 = _n_builds("test_raises")
+
+    def build(d):
+        dirs.append(d)
+        with open(os.path.join(d, "half_written"), "w") as f:
+            f.write("x")
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        artifacts.get_or_build(
+            spark, corpus, "test_raises", spark.read.parquet(corpus), build,
+            at_rest=True,
+        )
+    assert len(dirs) == 1 and not os.path.exists(dirs[0])
+    assert _live("test_raises") == [] and _n_builds("test_raises") == n0
+
+
+# name -> (the registered query that owns it, the table it is built from)
+_ARTIFACT_OWNERS = {
+    "silver": ("monthly_avg_price", "events"),
+    "ngram_pairs": ("dedup_clusters", "documents"),
+    "sig_store": ("dedup_minhash_incremental", "documents"),
+    "curation": ("corpus_curation_pipeline", "documents"),
+    "nb_model": ("nb_lang_classifier", "documents"),
+    "lm_model": ("lm_perplexity_buckets", "documents"),
+    "lm_kn_model": ("lm_perplexity_buckets_kn", "documents"),
+    "rho_scored": ("rho_excess_perplexity_select", "documents"),
+    "src_report": ("source_curation_report", "documents"),
+    "dsir_feats": ("dsir_importance_resample", "documents"),
+    "ivf_index": ("embedding_ann_ivf", "embeddings"),
+    "ivf_fixed_index": ("embedding_ann_ivf_fixed", "embeddings"),
+    "lsh_keys": ("embedding_ann_lsh", "embeddings"),
+    "pq_codes": ("embedding_pq_topk", "embeddings"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ARTIFACT_OWNERS))
+def test_artifact_rebuilds_when_its_source_changes(spark, sf_dir, tmp_path, name):
+    """Every session artifact: rerunning its owning query over a copy of
+    the test tables after the source parquet's mtime moves builds it
+    again, keeps one live entry,
+    and removes the old at-rest directory."""
+    import shutil
+
+    from crypto_data_pipeline_spark.plans.registry import load_with_extras
+
+    query, table = _ARTIFACT_OWNERS[name]
+    fn = load_with_extras()[query].fn
+    sf = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, sf)
+    fn(spark, sf).count()
+    [before] = _live(name)
+    assert before["sf_dir"] == sf
+    n = _n_builds(name)
+    f = os.path.join(sf, f"{table}.parquet")
+    st = os.stat(f)
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    fn(spark, sf).count()
+    assert _n_builds(name) == n + 1
+    [after] = _live(name)
+    assert after["source"] != before["source"]
+    if before["dir"] is not None:
+        assert not os.path.exists(before["dir"]) and os.path.isdir(after["dir"])
 
 
 # ---------------------------------------------------------------------------
@@ -274,7 +362,7 @@ def test_pair_set_built_once_per_session(spark, tmp_path, monkeypatch):
     sf = str(tmp_path / "sf")
     _write_docs(sf, _NEW_DOCS)
     cm = spark._jsparkSession.sharedState().cacheManager()
-    evicts_prior = bool(eq._NGRAM_PAIRS_CACHE)
+    evicts_prior = bool(_live("ngram_pairs"))
     n0 = cm.numCachedEntries()
     assert eq.dedup_clusters(spark, sf).count() == 2  # {1, 2} and {5, 6}
     # the pair artifact replaced any prior one; nothing else stays cached

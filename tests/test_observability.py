@@ -173,6 +173,23 @@ def test_prior_bench_truncated_tail_and_local_fallback(tmp_path):
     assert name == "BENCH_LOCAL_r07.json" and got == {"q1": 111}
 
 
+def test_bench_record_never_overwrites_a_committed_one(tmp_path):
+    """bench.py names its full record after the next round; when that
+    file exists (it is committed), the run writes a suffixed twin and
+    leaves the existing bytes as they were."""
+    import json
+
+    from bench import write_record
+
+    (tmp_path / "BENCH_r14.json").write_text("{}")
+    assert write_record(str(tmp_path), {"run": 1}) == "BENCH_LOCAL_r15.json"
+    committed = (tmp_path / "BENCH_LOCAL_r15.json").read_bytes()
+    name = write_record(str(tmp_path), {"run": 2})
+    assert name.startswith("BENCH_LOCAL_r15.") and name != "BENCH_LOCAL_r15.json"
+    assert (tmp_path / "BENCH_LOCAL_r15.json").read_bytes() == committed
+    assert json.loads((tmp_path / name).read_text()) == {"run": 2}
+
+
 def test_proc_tree_cpu_seconds_monotone_across_child_exit():
     """Round 13: the bench's per-query CPU metric must stay monotone
     when a descendant exits between snapshots (Python workers are

@@ -234,6 +234,7 @@ def test_silver_downgrade_is_loud(spark, sf_dir, monkeypatch, caplog):
 
     import pytest
 
+    from crypto_data_pipeline_spark import artifacts
     from crypto_data_pipeline_spark.plans import core_queries as cq
     from crypto_data_pipeline_spark.sources import bucketed
 
@@ -254,7 +255,7 @@ def test_silver_downgrade_is_loud(spark, sf_dir, monkeypatch, caplog):
         raise RuntimeError("warehouse is read-only (simulated)")
 
     monkeypatch.setattr(bucketed, "write_bucketed", broken_warehouse)
-    monkeypatch.setattr(cq, "_SILVER_CACHE", {})
+    monkeypatch.setattr(artifacts, "_ENTRIES", {})
     monkeypatch.delenv("SPARK_GRAFT_REQUIRE_SILVER", raising=False)
     with caplog.at_level(logging.WARNING, logger=cq.__name__):
         df = cq._history(spark, other_sf)
@@ -266,7 +267,7 @@ def test_silver_downgrade_is_loud(spark, sf_dir, monkeypatch, caplog):
     assert df.limit(1).count() == 1
 
     # strict mode refuses the downgrade outright
-    monkeypatch.setattr(cq, "_SILVER_CACHE", {})
+    monkeypatch.setattr(artifacts, "_ENTRIES", {})
     monkeypatch.setenv("SPARK_GRAFT_REQUIRE_SILVER", "1")
     with pytest.raises(RuntimeError, match="read-only"):
         cq._history(spark, other_sf)

@@ -1,20 +1,17 @@
-"""Round-14 optimization profiler (guide §1: measure first).
+"""Query profiler (guide §1: measure first) for any registered query:
 
-Same methodology as tools/r13_profile.py, extended to profile ANY
-registered query (the round's targets include gate-only paths such as
-dedup_clusters and model_comparison_sanity, which are not
-bench-flagged):
-
-  * dumps `.explain("formatted")` to plans/r14/<name>_<tag>.txt
+  * dumps `.explain("formatted")` to plans/profile/<name>_<tag>.txt
   * times one noop-sink run (steady state: everything pre-warmed the
     same way bench.py warms) and counts the Spark JOBS the single call
     schedules (driver actions inside the query fn + the final noop)
   * records executed-plan truth (shuffle bytes, Exchange count, spill)
     via observability.plan_runtime_metrics
 
-Usage: python tools/r14_profile.py [tag] [query ...]
+Usage: python tools/profile.py [tag] [query ...]
   tag defaults to "before"; naming queries limits the run (default:
-  all bench-flagged queries). Writes plans/r14/PROFILE_<tag>.json.
+  all bench-flagged queries; gate-only paths such as dedup_clusters can
+  be named too). Writes plans/profile/PROFILE_<tag>.json, merging into
+  an existing file of that tag.
 """
 
 from __future__ import annotations
@@ -24,7 +21,10 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# Run as a script, this directory is sys.path[0], where this file would
+# shadow the stdlib `profile` module that cProfile (imported by pyspark)
+# loads: replace it with the repo root.
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 from crypto_data_pipeline_spark import get_spark
 from crypto_data_pipeline_spark.observability import (
@@ -48,10 +48,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ["SPARK_GRAFT_REQUIRE_SILVER"] = "1"
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out_dir = os.path.join(repo, "plans", "r14")
+    out_dir = os.path.join(repo, "plans", "profile")
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark("r14-profile")
+    spark = get_spark("profile")
     sc = spark.sparkContext
     registry = load_with_extras()
     if only:
@@ -72,9 +72,9 @@ def main() -> None:
 
     rows: dict[str, dict] = {}
     for spec in specs:
-        group = f"r14prof-{spec.name}"
+        group = f"profile-{spec.name}"
         sc.setJobGroup(group, spec.name)
-        sc.setJobDescription(f"r14 profile: {spec.name}")
+        sc.setJobDescription(f"profile: {spec.name}")
         cpu0 = proc_tree_cpu_seconds()
         t0 = time.perf_counter()
         df = spec.fn(spark, sf_dir)
